@@ -1449,7 +1449,6 @@ def q_fold(spark, sf_dir):
 def q_sql_query_source(spark, sf_dir):
     """Raw-SQL model source (SURVEY §2.1 #2): opaque query walled into its
     own subplan, DSL transforms layered on top."""
-    _conn(spark, sf_dir).sql("SELECT 1")  # ensure temp views registered
     m = Model(
         _conn(spark, sf_dir),
         sql_query="SELECT l_returnflag, l_quantity, l_extendedprice "

@@ -15,30 +15,75 @@ never materializes data on the driver.
 from __future__ import annotations
 
 import os
-from typing import Dict, Optional
+import threading
+from typing import AbstractSet, Dict, Optional, Tuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+# A local driver heap never grows past this: oversized heaps (64g) made
+# CPU-heavy stages 4x slower than 16g via G1 young-gen behaviour.
+HEAP_CAP_BYTES = 16 << 30
 
-def default_session(app_name: str = "hashquery_spark", cpus: Optional[int] = None) -> SparkSession:
-    """Build a local SparkSession tuned for the test/bench environment.
+# Raw SQL resolves bare table names through session-global temp views, so
+# registering a Connection's views and analyzing the query must not
+# interleave with another Connection doing the same on a shared session.
+_RAW_SQL_LOCK = threading.Lock()
+
+
+def session_resources(
+    affinity: AbstractSet[int], mem_bytes: int, heap: Optional[str] = None
+) -> Tuple[int, str]:
+    """(cores, driver heap) for a local session on a host whose process may
+    run on the CPUs in ``affinity`` and use ``mem_bytes`` of memory: one
+    task slot per usable CPU, and half the memory (at most 16g) as heap
+    unless ``heap`` overrides it."""
+    if heap is None:
+        heap = f"{min(mem_bytes // 2, HEAP_CAP_BYTES) >> 20}m"
+    return len(affinity), heap
+
+
+def host_memory_bytes() -> int:
+    """Physical memory, or the cgroup limit when that is lower."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def host_session_resources() -> Tuple[int, str]:
+    """:func:`session_resources` for this process; ``SPARK_GRAFT_DRIVER_MEM``
+    overrides the heap."""
+    return session_resources(
+        os.sched_getaffinity(0),
+        host_memory_bytes(),
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
+    )
+
+
+def default_session(app_name: str = "hashquery_spark") -> SparkSession:
+    """Build a local SparkSession sized from the host (see
+    :func:`host_session_resources`).
 
     On a real cluster callers pass their own session; these configs are the
     local-mode equivalents of sane cluster defaults (AQE on, sensible
     shuffle partition count)."""
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores, heap = host_session_resources()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+        .master(f"local[{cores}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode = one JVM on the driver; this is the only memory knob.
-        # 16g measured fastest here: oversized heaps (64g) made CPU-heavy
-        # stages 4x slower via G1 young-gen behavior — raise via env when a
-        # workload actually spills
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # local mode = one JVM on the driver; this is the only memory knob
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Spark has no TIMESTAMP(NANOS) parquet support (SPARK-40819); read
@@ -52,12 +97,16 @@ def default_session(app_name: str = "hashquery_spark", cpus: Optional[int] = Non
 def _restore_nano_timestamps(df: DataFrame, path: str) -> DataFrame:
     """With ``nanosAsLong`` enabled, timestamp[ns] parquet columns surface as
     int64 nanos; cast them back to timestamps (truncating to micros, which is
-    Spark's native precision). Uses pyarrow to find affected columns."""
+    Spark's native precision). Uses pyarrow to find affected columns; a path
+    pyarrow cannot read as one file (a directory, a glob) is left as is."""
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
-
+    except ImportError:
+        return df
+    try:
         schema = pq.read_schema(path)
-    except Exception:
+    except (OSError, pa.ArrowException):
         return df
     from pyspark.sql import functions as F
 
@@ -80,8 +129,8 @@ class Connection:
         # parquet too (runtime-settable SQL conf; see _restore_nano_timestamps)
         try:
             self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+        except AnalysisException:
+            pass  # a session that forbids runtime SQL conf changes
 
     def __deepcopy__(self, memo):
         return self  # sessions/registries are shared, never copied
@@ -174,9 +223,14 @@ class Connection:
         return self.spark.table(name)
 
     def sql(self, query: str) -> DataFrame:
-        for name, df in self._tables.items():
-            df.createOrReplaceTempView(name)
-        return self.spark.sql(query)
+        """Analyze raw SQL against this Connection's tables. Bare names
+        resolve through session-global temp views; ``spark.sql`` analyzes
+        eagerly, so the returned frame is bound to this Connection's views
+        before the lock lets another Connection replace them."""
+        with _RAW_SQL_LOCK:
+            for name, df in self._tables.items():
+                df.createOrReplaceTempView(name)
+            return self.spark.sql(query)
 
 
 def connection_for_dir(sf_dir: str, spark: Optional[SparkSession] = None) -> Connection:

@@ -37,6 +37,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,7 +94,7 @@ class ExprContext:
             return None
         try:
             return self.df.select(col).schema[0].dataType
-        except Exception:
+        except AnalysisException:
             return None
 
 

@@ -19,6 +19,7 @@ import functools
 import warnings
 from typing import Any, Dict, List, Optional, Union
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -197,17 +198,22 @@ class Model:
         self._primary_key: ColumnExpression = column("id")
         self._activity_schema: Optional[ModelActivitySchema] = None
         self._custom_meta: Dict[str, Any] = {}
-        # Schema reflection is free on Spark (df.schema, no job) — the
-        # reference instead fires LIMIT-0 probe queries
-        # (src/run/db/reflection.py:17-84). Auto-attach one attribute per
-        # physical column so `attr.<col>` works out of the box.
-        if self._connection is not None and self._source is not None:
-            try:
-                state = CompileState(connection=self._connection)
-                for col_name in compile_model_df(self, state).columns:
-                    self._attributes.add(column(col_name))
-            except Exception:
-                pass  # raw-SQL sources may not be resolvable yet
+        if self._source is not None:
+            self._reflect_attributes()
+
+    def _reflect_attributes(self) -> None:
+        """Attach one attribute per column of the compiled source, so
+        `attr.<col>` works out of the box. Schema reflection is free on
+        Spark (analysis only, no job) — the reference instead fires LIMIT-0
+        probe queries (src/run/db/reflection.py:17-84)."""
+        if self._connection is None:
+            return
+        try:
+            df = compile_model_df(self, CompileState(connection=self._connection))
+        except AnalysisException:
+            return  # a raw-SQL source naming tables not registered yet
+        for col_name in df.columns:
+            self._attributes.add(column(col_name))
 
     # --- internal accessor for keypaths (reference: model.py:101-160) ---
 
@@ -941,13 +947,7 @@ class Model:
         self._attributes = IdentifiableMap()
         self._measures = IdentifiableMap()
         self._namespaces = IdentifiableMap()
-        if self._connection is not None:
-            try:
-                state = CompileState(connection=self._connection)
-                for col_name in compile_model_df(self, state).columns:
-                    self._attributes.add(column(col_name))
-            except Exception:
-                pass
+        self._reflect_attributes()
 
     def _reset_to_schema(self, schema: str) -> None:
         from pyspark.sql.types import StructType

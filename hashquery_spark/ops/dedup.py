@@ -20,6 +20,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -106,7 +107,7 @@ def persisted_rdd_ids(sc):
     try:
         jmap = sc._jsc.getPersistentRDDs()
         return {int(k) for k in jmap.keySet().toArray()}
-    except Exception:  # noqa: BLE001 — introspection only; skip cleanup
+    except Py4JError:  # introspection only; skip cleanup
         return None
 
 
@@ -121,7 +122,7 @@ def unpersist_rdd_ids(sc, ids):
             jrdd = jmap.get(rid)
             if jrdd is not None:
                 jrdd.unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort
+    except Py4JError:  # cleanup is best-effort
         pass
 
 

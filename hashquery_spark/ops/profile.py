@@ -1616,11 +1616,11 @@ def spearman_corr(
     single-node sf10 this pipeline runs ~2.8× DuckDB's one in-memory
     rank window (12.9/14.0 s vs ~4.6 s). Both attempted alternatives
     lost — a fused raw-row repartition (r6: 2.89 vs 2.56 s at sf0.1)
-    and a range-partitioned sort + Arrow numpy local-rank pass (r9,
-    scripts/exp_spearman_ranksort.py: 30.2 s at sf10). Two-phase
-    distributed ranking inherently pays two histogram exchanges + a
-    checkpoint where a shared-memory sort pays none; the design is for
-    the cluster regime where no single-task sort can hold a group.
+    and a range-partitioned sort + Arrow numpy local-rank pass (r9:
+    30.2 s at sf10). Two-phase distributed ranking inherently pays two
+    histogram exchanges + a checkpoint where a shared-memory sort pays
+    none; the design is for the cluster regime where no single-task sort
+    can hold a group.
 
     ``exact``: the default (False) accumulates the Pearson-on-ranks sums
     in DOUBLE — ranks are exact integers, so only the accumulation can

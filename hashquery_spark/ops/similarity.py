@@ -59,7 +59,7 @@ def _norm_sql(vec: str) -> str:
 
 
 # Per-probe candidate count below which the stripe phase is pure tax —
-# measured both ways (BENCH_sf10 r9 A/B, ann_topk_salted vs _single):
+# measured both ways (r9 sf10 A/B, ann_topk_salted vs _single):
 # at 20k candidates/probe the single window edges the stripes (1.89 vs
 # 1.98 s), at 200k the stripes win decisively (17.6 vs 27.2 s — the
 # single form leaves one straggler sort task per probe). 64k is the
@@ -562,7 +562,7 @@ def auto_cluster_count(
     recipe. √n balances the two cost terms of cluster blocking:
     centroid assignment is Θ(k·n) and in-cell pair work is Θ(n²/k), so
     k = √n makes the total Θ(n^1.5) — a FIXED k leaves the pair term
-    quadratic (the r5 BENCH_sf1 measured semantic_dedup superlinear at
+    quadratic (the r5 10x-tier bench measured semantic_dedup superlinear at
     fixed k=16). ``k_max`` bounds the driver-held centroid literals and
     the codegen'd argmin width (flat assignment measured healthy through
     k=512 / dim=64); past n = k_max² the paper's regime (100k clusters
@@ -589,7 +589,7 @@ def ivf_index(
     :func:`auto_cluster_count` (k = clamp(⌈√n⌉, 8, 512) — one bounded
     count job); a FIXED k keeps per-cell population growing linearly
     with the corpus, which turns every in-cell consumer quadratic (the
-    r5 BENCH_sf1 semantic_dedup finding). Explicit k stays available for
+    r5 10x-tier semantic_dedup finding). Explicit k stays available for
     oracle-deterministic entries.
 
     Centroids default to the deterministic first ``n_centroids`` corpus
@@ -910,7 +910,7 @@ def semantic_dedup(
     embeddings). ``n_clusters=None`` (default) APPLIES that recipe:
     k = clamp(⌈√n⌉, 8, 512) from one bounded count
     (:func:`auto_cluster_count`) — a fixed k left the pair term
-    quadratic (measured superlinear in the r5 BENCH_sf1). Cell
+    quadratic (measured superlinear in the r5 10x-tier bench). Cell
     assignment is a narrow codegen'd pass against centroid literals (no
     join, see :func:`ivf_index`); the in-cell self-join shuffles on the
     cell key only.

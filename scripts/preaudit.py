@@ -20,10 +20,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from hashquery_spark.connection import default_session  # noqa: E402
 from hashquery_spark.parity import audit_query, duck_connection  # noqa: E402
 
-# Everything that can change what a declared query computes. bench.py is
-# deliberately absent (timing harness, not semantics).
+# Everything that can change what a declared query computes.
 SEMANTIC_SOURCES = (
     "hashquery_spark",
     "__spark_entry__.py",
@@ -61,18 +61,7 @@ def source_tree_hash(root: str) -> str:
 
 
 def main(sf_dirs):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .appName("preaudit")
-        .getOrCreate()
-    )
+    spark = default_session("preaudit")
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     report, failures = {}, []
